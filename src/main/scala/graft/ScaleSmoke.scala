@@ -311,18 +311,10 @@ object ScaleSmoke {
       s"stream probe needs factor >= 2 (got $factor): eviction is only " +
         "observable when the watermark advances between data batches")
     // Normalize ts to epoch-µs LONG up front whatever the file's physical
-    // encoding declares (TimestampType µs vs legacy ns-as-long) — the same
-    // schema-adaptive branch as Tables.events, applied to the probe's
-    // clone arithmetic. Clones are then written as real µs TimestampType,
-    // so the replay schema below is encoding-independent.
-    val evRaw = spark.read.parquet(s"$src/events.parquet")
-    val ev = evRaw.schema("ts").dataType match {
-      case _: TimestampType => evRaw.withColumn("ts", unix_micros(col("ts")))
-      case _: TimestampNTZType => evRaw.withColumn("ts",
-        unix_micros(col("ts").cast(TimestampType)))
-      case LongType => evRaw.withColumn("ts", expr("ts div 1000"))
-      case other => sys.error(s"events.ts: unsupported encoding $other")
-    }
+    // encoding declares (the schema-adaptive Tables.events), for the
+    // probe's clone arithmetic. Clones are then written as real µs
+    // TimestampType, so the replay schema below is encoding-independent.
+    val ev = Tables.events(spark, src).withColumn("ts", unix_micros(col("ts")))
     val st = ev.agg(min("ts"), max("ts"), max("event_id")).head()
     val span = st.getLong(1) - st.getLong(0)
     val shift = span + 4L * 3600L * 1000000L // µs; slices never overlap

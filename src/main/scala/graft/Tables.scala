@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,47 +26,81 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
 
-  /** SCHEMA-ADAPTIVE events loader (the r12→r13 lesson): branch on what
-    * the parquet footer actually declares instead of assuming the encoding
-    * profiled at survey time. A real lake's files drift physical encodings
-    * (ns→µs, int32→int64) without notice; the 2026-08-13 testdata
-    * regeneration did exactly that (TIMESTAMP(NANOS) → TIMESTAMP(MICROS))
-    * and a hard-coded ns-as-long assumption broke 36 keys at once.
+  /** `spark.read.parquet(path)` with the schema given up front, so
+    * building the DataFrame launches no Spark job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver.
     *
-    *  - ts arrives as `TimestampType` (µs/ms encodings, or ns when Spark
-    *    truncates natively): pass through unchanged.
-    *  - ts arrives as `LongType` (a TIMESTAMP(NANOS) file read under the
-    *    legacy `spark.sql.legacy.parquet.nanosAsLong=true` session conf,
-    *    which Verify/Bench still pin for backward compat — the Spark 4
-    *    vectorized reader otherwise rejects NANOS outright): floor-truncate
-    *    ns→µs, bit-identical to DuckDB's own read-time truncation.
+    * Spark's own inference runs one Spark job to read a single footer.
+    * For a file, this reads that footer directly through the path's
+    * Hadoop FileSystem and hands it to the conversion Spark's inference
+    * applies to each footer (`readSchemaFromFooter`: the Spark
+    * row-metadata key if the footer has one, else the parquet schema
+    * converted under the session's nanosAsLong / inferTimestampNTZ /
+    * binaryAsString confs).
+    * A directory (a Spark-written table) keeps Spark's inference, which
+    * also resolves summary files, partition columns and mergeSchema.
+    *
+    * Nothing is cached: the footer is read on every call, so a file
+    * regenerated in place can never serve a stale schema. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (status.isDirectory) spark.read.parquet(path).schema
+    else {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.NO_FILTER)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
+
+  /** SCHEMA-ADAPTIVE events loader: branch on what the parquet footer
+    * declares instead of assuming one encoding. A real lake's files drift
+    * physical encodings (ns→µs, int32→int64) without notice; the
+    * 2026-08-13 testdata regeneration did exactly that (TIMESTAMP(NANOS) →
+    * TIMESTAMP(MICROS)) and a hard-coded ns-as-long assumption broke 36
+    * keys at once. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    canonicalTs(parquet(spark, s"$dir/events.parquet"))
+
+  /** `events.ts` as `TimestampType` whatever its physical encoding, for
+    * batch and streaming frames alike:
+    *
+    *  - `TimestampType` (µs/ms encodings): passes through unchanged.
+    *  - `TimestampNTZType` (timestamp[us] with no isAdjustedToUTC
+    *    annotation, the 2026-08-13 generation): cast to `TimestampType`.
+    *    With the UTC session tz every entry point pins, the cast maps each
+    *    naive instant to the identical epoch-µs value, the same read-time
+    *    interpretation DuckDB applies to the file.
+    *  - `LongType` (a TIMESTAMP(NANOS) file read under the legacy
+    *    `spark.sql.legacy.parquet.nanosAsLong=true` session conf, which
+    *    Verify/Bench still pin; the Spark 4 vectorized reader otherwise
+    *    rejects NANOS outright): floor-truncate ns→µs, bit-identical to
+    *    DuckDB's own read-time truncation.
     *
     * Anything else fails loud with the observed type — never silently
     * misinterpret a timestamp encoding (the µs-read-as-ns failure mode
     * collapses every timestamp ~1000× toward the epoch with no error). */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/events.parquet")
-    df.schema("ts").dataType match {
-      case _: TimestampType => df
-      // timestamp[us] with no isAdjustedToUTC annotation (the 2026-08-13
-      // generation): Spark 4 infers TIMESTAMP_NTZ. Cast to TimestampType —
-      // with the UTC session tz every entry point pins, the cast maps each
-      // naive instant to the identical epoch-µs value, the same read-time
-      // interpretation DuckDB applies to the file.
-      case _: TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+  def canonicalTs(events: DataFrame): DataFrame =
+    events.schema("ts").dataType match {
+      case _: TimestampType => events
+      case _: TimestampNTZType => events.withColumn("ts", col("ts").cast(TimestampType))
+      case LongType => events.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case other => sys.error(
         s"events.ts: unsupported physical encoding $other — expected " +
           "TimestampType/TimestampNTZType (µs) or LongType (legacy ns-as-long)")
     }
-  }
 
   /** One-line-per-table data profile, printed at Verify/Bench startup so
     * the NEXT silent testdata regeneration is visible in the driver log
     * instead of surfacing as dozens of opaque per-query errors. Reads only
-    * parquet footers (no data IO). Branch-don't-assert: the events ts
+    * parquet footers, on the driver. Branch-don't-assert: the events ts
     * encoding is named explicitly since it is the column that drifted. */
   def profileData(spark: SparkSession, dir: String): Unit = {
     val tables = Seq("region", "nation", "customer", "supplier", "part",
@@ -69,7 +109,7 @@ object Tables {
       val p = s"$dir/$name.parquet"
       val line =
         try {
-          val sch = spark.read.parquet(p).schema
+          val sch = parquetSchema(spark, p)
           val cols = sch.map(f => s"${f.name}:${f.dataType.simpleString}")
           s"[profile] $name(${cols.mkString(", ")})"
         } catch { case e: Exception =>

@@ -62,61 +62,21 @@ object Streaming {
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
 
   /** SCHEMA-ADAPTIVE streaming source (mirrors [[graft.Tables.events]]):
-    * streaming sources require an explicit schema, so probe the actual
-    * file footer with a one-off batch read (footer-only IO) and declare
-    * exactly what it reports. Under that schema ts arrives either as a
-    * real `TimestampType` (µs files — pass through) or as a raw ns
-    * `LongType` (legacy TIMESTAMP(NANOS) files read under the
-    * `nanosAsLong` session conf — floor-truncate to µs). Hard-coding
-    * either encoding is the r12 failure mode: the µs regeneration read
-    * through a declared ns-long schema silently collapsed every
-    * timestamp ~1000× toward the epoch and broke all 10 streaming keys. */
-  /** Footer-probe memo: the physical schema of `$d/events.parquet` is a
-    * pure function of the file, and every i-key's every bench run was
-    * re-listing + re-reading the footer just to learn it (≈20 i-keys ×
-    * N passes of pure fixed cost). The entry binds the file's
-    * [[graft.Tables.contentSig]] signature (one stat + an 8 KiB boundary
-    * read per call — r19: content-strengthened with the other source-
-    * bound caches, since a same-length same-millisecond regeneration
-    * that flips the ts ENCODING is precisely the drift this probe
-    * guards) INSIDE the value, keyed by dir — the value-embedded-
-    * signature idiom shared with tumblingAppendCache/frameCache (r19
-    * ADVICE: a signature-in-the-key memo grows an entry per in-place
-    * regeneration and never evicts the stale ones) — so an in-place
-    * regeneration of events.parquet during a live session (the r12
-    * µs/ns hazard this footer probe exists to catch) REPLACES the memo
-    * instead of serving the stale encoding silently. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, StructType)]()
-
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val f = new java.io.File(s"$d/events.parquet")
-    val sig = contentSig(f)
-    val fileSchema = schemaCache.compute((s, d), { (_, old) =>
-      if (old != null && old._1 == sig) old
-      else (sig, s.read.parquet(s"$d/events.parquet").schema)
-    })._2
-    val raw = s.readStream.schema(fileSchema)
+    * streaming sources require an explicit schema, so declare exactly what
+    * the file's footer reports ([[graft.Tables.parquetSchema]], read on
+    * every call) and canonicalize ts with the batch loader's
+    * [[graft.Tables.canonicalTs]]. Hard-coding either encoding is the r12
+    * failure mode: the µs regeneration read through a declared ns-long
+    * schema silently collapsed every timestamp ~1000× toward the epoch
+    * and broke all 10 streaming keys. */
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
+    canonicalTs(s.readStream.schema(parquetSchema(s, s"$d/events.parquet"))
       // events.parquet is a single FILE: a non-glob path makes
       // FileStreamSource force basePath to the file itself (then reject it
       // as "must be a directory"), so address it via a glob and anchor
       // basePath at the table dir
       .option("basePath", d)
-      .parquet(s"$d/events.parquet*")
-    fileSchema("ts").dataType match {
-      case _: TimestampType => raw
-      // un-annotated timestamp[us] infers as TIMESTAMP_NTZ; cast to
-      // TimestampType (µs-exact under the pinned UTC session tz) so every
-      // downstream watermark/window sees the one canonical type
-      case _: TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case other => sys.error(
-        s"events.ts: unsupported physical encoding $other — expected " +
-          "TimestampType/TimestampNTZType (µs) or LongType (legacy ns-as-long)")
-    }
-  }
+      .parquet(s"$d/events.parquet*"))
 
   /** Run a streaming DataFrame to completion through the memory sink and
     * return the result table. The checkpoint (offset/commit logs + state
@@ -153,8 +113,14 @@ object Streaming {
         .option("checkpointLocation", scratch(s, name, "ckpt"))
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.table(name)
+      s.table(name)
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prev)
+      // the returned DataFrame keeps the sink's rows once its view is
+      // dropped, so neither the view nor the checkpoint outlives this call
+      s.catalog.dropTempView(name)
+      deleteRec(new java.io.File(scratch(s, name, "ckpt")))
+    }
   }
 
   /** Shared tumbling-Append streaming run (r17, VERDICT r16 task 1 —
@@ -171,8 +137,8 @@ object Streaming {
     * executes on the RocksDB provider (i12's declared production
     * provider, asserted fail-loud from the query's own progress
     * metrics); provider choice is result-invariant, so i9's oracle is
-    * untouched. Key carries the events file's length+mtime signature
-    * (the schemaCache idiom) so an in-place regeneration invalidates. */
+    * untouched. The entry binds the events file's content signature so
+    * an in-place regeneration invalidates. */
   private case class SharedRun(sig: String, table: String, df: DataFrame)
   private val tumblingAppendCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SharedRun]()

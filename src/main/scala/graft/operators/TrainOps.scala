@@ -1998,7 +1998,7 @@ object TrainOps {
     // provably skipping the other partitions' files.
     "l28_partition_pruned_scan" -> ((s, d) => {
       val dir = cachedFixture(s, d, "langpart_docs") { tmp =>
-        s.read.parquet(s"$d/documents.parquet")
+        t(s, d, "documents")
           .write.partitionBy("lang").parquet(s"$tmp/documents_by_lang")
       }
       val scan = s.read.parquet(s"$dir/documents_by_lang")
@@ -2280,7 +2280,7 @@ object TrainOps {
     // the FLAT table.
     "l34_join_dpp_prune" -> ((s, d) => {
       val dir = cachedFixture(s, d, "langpart_docs") { tmp =>
-        s.read.parquet(s"$d/documents.parquet")
+        t(s, d, "documents")
           .write.partitionBy("lang").parquet(s"$tmp/documents_by_lang")
       }
       val dim = t(s, d, "documents")
@@ -2339,7 +2339,7 @@ object TrainOps {
         // ceil(rows/100) compaction target at larger corpora (the 8×
         // ScaleSmoke probe caught exactly that). ~25 rows per fragment,
         // capped so the fixture write stays bounded at probe factors.
-        val docs = s.read.parquet(s"$d/documents.parquet")
+        val docs = t(s, d, "documents")
         val nFrag = math.max(16L, math.min(2048L,
           (docs.count() + 24) / 25)).toInt
         docs.repartition(nFrag)

@@ -353,6 +353,23 @@ class StreamingSpec extends AnyFunSuite {
       s"superseded memory-sink table leaked: $n9")
   }
 
+  test("runToTable drops its memory-sink view and checkpoint; results survive") {
+    val runs = (1 to 3).map(_ => SparkEntry.queries("i1_stream_tumbling")(spark, sfTiny))
+    val names = runs.map(df => "graft_stream_\\d+".r
+      .findFirstIn(df.queryExecution.analyzed.toString)
+      .getOrElse(fail("i1: no memory-sink table in the analyzed plan")))
+    assert(names.distinct.size == 3, s"three runs, three sinks: $names")
+    val views = spark.catalog.listTables().collect().map(_.name).toSet
+    names.foreach { n =>
+      assert(!views.contains(n), s"memory-sink view $n leaked")
+      assert(!new java.io.File(Tables.scratch(spark, n, "ckpt")).exists(),
+        s"checkpoint dir of $n leaked")
+    }
+    val rows = runs.map(_.collect().toSeq)
+    assert(rows.head.nonEmpty && rows.distinct.size == 1,
+      "the runs must return equal, non-empty results after cleanup")
+  }
+
   test("i17 transformWithState: state continues across batches on RocksDB") {
     // fresh session — transformWithState REQUIRES the RocksDB provider
     val s2 = spark.newSession()

@@ -20,36 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the loader's actual decision input.
   */
 class TsEncodingSpec extends AnyFunSuite {
+  import TsEncodingSpec._
   private val spark = TestSpark.spark
   import spark.implicits._
-
-  // (event_id, epoch-µs ts, user_id, event_type, value, props) — spans
-  // 3 hours so the i1 tumbling agg yields multiple windows per type
-  private val baseUs: Seq[(Long, Long, Long, String, Double, String)] = {
-    val t0 = 1700000000000000L // 2023-11-14T22:13:20Z, µs
-    (0L until 24L).map { i =>
-      (i, t0 + i * 450L * 1000000L, i % 5,
-        if (i % 3 == 0) "click" else "view", i * 1.5, s"""{"k":$i}""")
-    }
-  }
-
-  private def writeAll(): Seq[String] = {
-    val root = Tables.scratch(spark, TestSpark.sfTiny, "ts_encoding_spec")
-    val df = baseUs.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
-    def emit(sub: String, ts: org.apache.spark.sql.Column): String = {
-      df.select(col("event_id"), ts.as("ts"),
-          col("user_id"), col("event_type"), col("value"), col("props"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/$sub/events.parquet")
-      s"$root/$sub"
-    }
-    Seq(
-      // tz-adjusted µs: a real TimestampType column (TIMESTAMP(MICROS, UTC))
-      emit("us", timestamp_micros(col("ts_us"))),
-      // un-annotated µs (the 2026-08-13 driver generation): TIMESTAMP_NTZ
-      emit("ntz", timestamp_micros(col("ts_us")).cast("timestamp_ntz")),
-      // legacy generation: raw ns longs, as a NANOS file arrives under the conf
-      emit("ns", col("ts_us") * 1000L))
-  }
 
   test("Tables.events adapts to all three ts encodings and agrees exactly") {
     val dirs = writeAll()
@@ -96,5 +69,40 @@ class TsEncodingSpec extends AnyFunSuite {
     assert(lines.size == 10, s"expected 10 table lines, got ${lines.size}")
     assert(lines.exists(l => l.startsWith("[profile] events(") && l.contains("ts:timestamp")),
       s"events profile line must show the live ts encoding: $lines")
+  }
+}
+
+object TsEncodingSpec {
+  private val spark = TestSpark.spark
+  import spark.implicits._
+
+  // (event_id, epoch-µs ts, user_id, event_type, value, props) — spans
+  // 3 hours so the i1 tumbling agg yields multiple windows per type
+  val baseUs: Seq[(Long, Long, Long, String, Double, String)] = {
+    val t0 = 1700000000000000L // 2023-11-14T22:13:20Z, µs
+    (0L until 24L).map { i =>
+      (i, t0 + i * 450L * 1000000L, i % 5,
+        if (i % 3 == 0) "click" else "view", i * 1.5, s"""{"k":$i}""")
+    }
+  }
+
+  /** The three encodings as Spark-written `events.parquet` directories;
+    * returns their table dirs (µs, NTZ, ns-as-long). */
+  def writeAll(): Seq[String] = {
+    val root = Tables.scratch(spark, TestSpark.sfTiny, "ts_encoding_spec")
+    val df = baseUs.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
+    def emit(sub: String, ts: org.apache.spark.sql.Column): String = {
+      df.select(col("event_id"), ts.as("ts"),
+          col("user_id"), col("event_type"), col("value"), col("props"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/$sub/events.parquet")
+      s"$root/$sub"
+    }
+    Seq(
+      // tz-adjusted µs: a real TimestampType column (TIMESTAMP(MICROS, UTC))
+      emit("us", timestamp_micros(col("ts_us"))),
+      // un-annotated µs (the 2026-08-13 driver generation): TIMESTAMP_NTZ
+      emit("ntz", timestamp_micros(col("ts_us")).cast("timestamp_ntz")),
+      // legacy generation: raw ns longs, as a NANOS file arrives under the conf
+      emit("ns", col("ts_us") * 1000L))
   }
 }
